@@ -389,33 +389,19 @@ object Dedup {
     val sigd = docs.select(col("doc"),
       TextFunctions.minhashSignature(col("shingles"), 0,
         numBands * rowsPerBand).as("sig"))
-    val bandCols = (0 until numBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1)): _*).as("key"))
-    }
-    sigd.select(col("doc"), explode(array(bandCols: _*)).as("bk"))
+    sigd.select(col("doc"),
+      explode(bandKeys(col("sig"), numBands, rowsPerBand)).as("bk"))
   }
 
-  /** Incremental (batch-vs-store) NEAR-dup — the nightly-ingest twin of
-    * [[incremental]] for near-duplicates: each batch document is flagged
-    * with its closest store near-duplicate (exact Jaccard dist ≤
-    * `maxDistance`, 6-dp-rounded) or marked novel. Candidates come from the
-    * same md5-family banded MinHash as [[nearMinhashMd5]], but the band join
-    * is strictly batch×store — batch-internal and store-internal pairs are
-    * never generated, so a nightly batch never re-verifies the store against
-    * itself. Ties on distance break to the lowest store id (lexicographic
-    * struct min), making the "closest" choice deterministic cross-engine.
-    *
-    * Batch documents with < `shingleN` tokens have no signature and are
-    * reported novel (kept): with no shingles there is no evidence of
-    * duplication, and dropping unverifiable content silently would bias the
-    * corpus.
-    *
-    * Scale shape: the store contributes `numBands` narrow band rows per
-    * document (hash-partitioned equi-join — the store's documents
-    * themselves never move), candidates ∝ true near-dup density, and the
-    * final left join returns one row per batch document. */
+  /** The (band, key) structs of a full numBands × rowsPerBand signature:
+    * band b's key concatenates its `rowsPerBand` minhashes. */
+  private def bandKeys(sig: Column, numBands: Int, rowsPerBand: Int): Column =
+    array((0 until numBands).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws("|", (0 until rowsPerBand).map(r =>
+          element_at(sig, b * rowsPerBand + r + 1)): _*).as("key"))
+    }: _*)
+
   /** The at-rest signature store for [[incrementalNear]]: per store
     * document, its distinct shingle set and one band-key row per band —
     * everything the nightly near-dup join needs from the store side.
@@ -425,13 +411,24 @@ object Dedup {
     * corpus — the md5 signature pass over the store is the single most
     * expensive part of the from-scratch formulation, and it is pure
     * function of content, so recomputing it nightly is pure waste.
-    * Schema: (doc, shingles, bk). */
+    * Schema: (doc, shingles, bk), one row per (doc, band).
+    *
+    * One projection per document: shingle, one [[graft.functions
+    * .TextFunctions.minhashSignature]] kernel call, then explode the band
+    * structs beside the shingles — no join back to a second copy of the
+    * documents. A document with no shingles (< `shingleN` tokens) has a
+    * null signature and gets no rows. */
   def signatureStore(store: DataFrame, textCol: String, idCol: String,
-      numBands: Int = 4, rowsPerBand: Int = 2, shingleN: Int = 3): DataFrame = {
-    val docs = md5ShingleDocs(store, textCol, idCol, shingleN)
-    md5Bands(docs, numBands, rowsPerBand).join(docs, "doc")
-      .select(col("doc"), col("shingles"), col("bk"))
-  }
+      numBands: Int = 4, rowsPerBand: Int = 2, shingleN: Int = 3): DataFrame =
+    store.select(col(idCol).as("doc"),
+        array_distinct(TextFunctions.wordShingles(col(textCol), shingleN))
+          .as("shingles"))
+      .select(col("doc"), col("shingles"),
+        TextFunctions.minhashSignature(col("shingles"), 0,
+          numBands * rowsPerBand).as("sig"))
+      .select(col("doc"), col("shingles"),
+        explode(when(col("sig").isNotNull,
+          bandKeys(col("sig"), numBands, rowsPerBand))).as("bk"))
 
   /** MinHash-estimator quality audit — the measurement the banded-dedup
     * thresholds rest on: for every md5-banded candidate pair, the
@@ -513,8 +510,9 @@ object Dedup {
     * near-dedup read path: a SQL-only consumer shingles tonight's batch,
     * minhashes it in the same md5 family (`md5('<h>|' || shingle)` — the
     * exact formulation the DuckDB oracles already pin), band-joins against
-    * the store's at-rest `bk` keys and exact-Jaccard-verifies, with the
-    * identical closest-store-id tie rule (lexicographic struct min).
+    * the store's at-rest `bk` keys and exact-Jaccard-verifies against the
+    * shingles each store row carries (the operator's one-join shape), with
+    * the identical closest-store-id tie rule (lexicographic struct min).
     * Same generated-SQL discipline as [[graft.operators.DetQuantizer
     * .fitSqlCtes]]; SqlSurfaceSpec proves row-identity with the Scala
     * operator over the same store. Pure built-ins — no extension
@@ -548,21 +546,15 @@ object Dedup {
        |    FROM (SELECT doc_id, split(text, ' ') AS ws FROM $batchView))
        |  WHERE size(shingles) > 0),
        |bbands AS (
-       |  SELECT doc, explode($bandStructs) AS bk
+       |  SELECT doc, shingles, explode($bandStructs) AS bk
        |  FROM bdocs),
-       |sdocs AS (SELECT DISTINCT doc, shingles FROM $storeView),
-       |cands AS (
-       |  SELECT DISTINCT b.doc AS b_doc, s.doc AS s_doc
-       |  FROM bbands b JOIN $storeView s ON b.bk = s.bk),
        |best AS (
        |  SELECT b_doc, min(named_struct('dist', dist, 's_doc', s_doc)) AS m
        |  FROM (
-       |    SELECT c.b_doc, c.s_doc,
-       |      round(1.0 - CAST(size(array_intersect(bd.shingles, sd.shingles)) AS DOUBLE)
-       |        / size(array_union(bd.shingles, sd.shingles)), 6) AS dist
-       |    FROM cands c
-       |    JOIN bdocs bd ON bd.doc = c.b_doc
-       |    JOIN sdocs sd ON sd.doc = c.s_doc)
+       |    SELECT b.doc AS b_doc, s.doc AS s_doc,
+       |      round(1.0 - CAST(size(array_intersect(b.shingles, s.shingles)) AS DOUBLE)
+       |        / size(array_union(b.shingles, s.shingles)), 6) AS dist
+       |    FROM bbands b JOIN $storeView s ON b.bk = s.bk)
        |  WHERE dist <= $maxDistance
        |  GROUP BY b_doc)
        |SELECT t.doc_id, b.m.s_doc AS near_store_id, b.m.dist AS dist,
@@ -571,6 +563,28 @@ object Dedup {
        |LEFT JOIN best b ON b.b_doc = t.doc_id""".stripMargin
   }
 
+  /** Incremental (batch-vs-store) NEAR-dup — the nightly-ingest twin of
+    * [[incremental]] for near-duplicates: each batch document is flagged
+    * with its closest store near-duplicate (exact Jaccard dist ≤
+    * `maxDistance`, 6-dp-rounded) or marked novel. Candidates come from the
+    * same md5-family banded MinHash as [[nearMinhashMd5]], but the band join
+    * is strictly batch×store — batch-internal and store-internal pairs are
+    * never generated, so a nightly batch never re-verifies the store against
+    * itself. Ties on distance break to the lowest store id (lexicographic
+    * struct min), making the "closest" choice deterministic cross-engine.
+    *
+    * Batch documents with < `shingleN` tokens have no signature and are
+    * reported novel (kept): with no shingles there is no evidence of
+    * duplication, and dropping unverifiable content silently would bias the
+    * corpus.
+    *
+    * Scale shape: one band join of batch rows against store rows, each
+    * side carrying its document's shingles, so candidates are verified
+    * where they meet — no candidate `distinct()` and no re-join to fetch
+    * shingle sets. A pair hit in several bands is verified once per hit;
+    * the per-batch-doc struct min gives the same answer over duplicates.
+    * Candidates ∝ true near-dup density, and the final left join returns
+    * one row per batch document. */
   def incrementalNear(batch: DataFrame, store: DataFrame, textCol: String,
       idCol: String, maxDistance: Double, numBands: Int = 4,
       rowsPerBand: Int = 2, shingleN: Int = 3): DataFrame =
@@ -580,21 +594,35 @@ object Dedup {
 
   /** [[incrementalNear]] against a PRECOMPUTED [[signatureStore]] — the
     * nightly-pipeline form: only the (small) batch is shingled and
-    * minhashed tonight; the store contributes its at-rest signatures. */
+    * minhashed tonight; the store contributes its at-rest signatures.
+    * A thin wrapper: sign the batch, then one [[nearProbe]]. */
   def incrementalNearAgainst(batch: DataFrame, storeSigs: DataFrame,
       textCol: String, idCol: String, maxDistance: Double,
-      numBands: Int = 4, rowsPerBand: Int = 2, shingleN: Int = 3): DataFrame = {
-    val bDocs = md5ShingleDocs(batch, textCol, idCol, shingleN)
-    val sDocs = storeSigs.select(col("doc"), col("shingles")).distinct()
-    val cands = md5Bands(bDocs, numBands, rowsPerBand)
-      .select(col("doc").as("b_doc"), col("bk"))
-      .join(storeSigs.select(col("doc").as("s_doc"), col("bk")), "bk")
-      .select("b_doc", "s_doc").distinct()
-    val best = cands
-      .join(bDocs.select(col("doc").as("b_doc"), col("shingles").as("b_sh")),
-        "b_doc")
-      .join(sDocs.select(col("doc").as("s_doc"), col("shingles").as("s_sh")),
-        "s_doc")
+      numBands: Int = 4, rowsPerBand: Int = 2, shingleN: Int = 3): DataFrame =
+    nearProbe(batch.select(col(idCol).as("doc_id")),
+      signatureStore(batch, textCol, idCol, numBands, rowsPerBand, shingleN),
+      storeSigs, maxDistance)
+
+  /** The batch×store near-dup probe over SIGNED rows: `batchSigs` and
+    * `storeSigs` are both in the [[signatureStore]] format, `batchIds`
+    * holds one `doc_id` per batch document. One band join of the two
+    * row sets, each row carrying its document's shingles, verifies every
+    * hit by exact Jaccard and keeps `min(struct(dist, s_doc))` per batch
+    * doc; duplicate hits of one pair across bands leave that min
+    * unchanged, so the join needs no `distinct()` and no re-join.
+    * `broadcastBatch` makes the batch side the broadcast side of both
+    * joins — the batch's band rows, then its per-doc best matches: right
+    * when the batch is bounded (a streaming trigger), so the store is only
+    * scanned, never shuffled. Output: (doc_id, near_store_id, dist,
+    * is_novel), one row per `batchIds` row. */
+  private[graft] def nearProbe(batchIds: DataFrame, batchSigs: DataFrame,
+      storeSigs: DataFrame, maxDistance: Double,
+      broadcastBatch: Boolean = false): DataFrame = {
+    val b = batchSigs.select(col("doc").as("b_doc"),
+      col("shingles").as("b_sh"), col("bk"))
+    val best = (if (broadcastBatch) broadcast(b) else b)
+      .join(storeSigs.select(col("doc").as("s_doc"),
+        col("shingles").as("s_sh"), col("bk")), "bk")
       .withColumn("dist", round(lit(1.0) -
         size(array_intersect(col("b_sh"), col("s_sh"))).cast("double") /
           size(array_union(col("b_sh"), col("s_sh"))), 6))
@@ -603,8 +631,8 @@ object Dedup {
       .agg(min(struct(col("dist"), col("s_doc"))).as("best"))
       .select(col("b_doc").as("doc_id"), col("best.s_doc").as("near_store_id"),
         col("best.dist").as("dist"))
-    batch.select(col(idCol).as("doc_id"))
-      .join(best, Seq("doc_id"), "left")
+    batchIds
+      .join(if (broadcastBatch) broadcast(best) else best, Seq("doc_id"), "left")
       .select(col("doc_id"), col("near_store_id"), col("dist"),
         col("near_store_id").isNull.as("is_novel"))
   }

@@ -133,7 +133,13 @@ object DeltaStore {
 
   /** Ids of `delta=<id>` children of `deltaRoot` holding committed data,
     * restricted to id >= minId (folded or replay-garbage directories
-    * below the watermark are NOT part of the snapshot). Sorted. */
+    * below the watermark are NOT part of the snapshot). Sorted.
+    *
+    * The id is parsed and filtered BEFORE any directory is inspected: the
+    * folded directories below `minId` are exactly what a concurrent
+    * [[gcSuperseded]] deletes, and listing one mid-delete would throw. A
+    * directory that still vanishes between the listing and its inspection
+    * holds no committed snapshot data and is left out. */
   def committedDeltaIds(spark: SparkSession, deltaRoot: String,
       minId: Long): Seq[Long] = {
     val f = fs(spark, deltaRoot)
@@ -141,10 +147,11 @@ object DeltaStore {
     if (!f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("delta=") &&
-          hasCommittedFiles(f, st.getPath))
+      if (st.isDirectory && n.startsWith("delta="))
         scala.util.Try(n.stripPrefix("delta=").toLong).toOption
-          .filter(_ >= minId)
+          .filter(id => id >= minId && (
+            try hasCommittedFiles(f, st.getPath)
+            catch { case _: java.io.FileNotFoundException => false }))
       else None
     }.sorted
   }
@@ -177,27 +184,41 @@ object DeltaStore {
   import org.apache.spark.sql.functions.{col, lit}
 
   /** Committed snapshot of a PURE-DELTA store (`<root>/delta=<id>` with no
-    * generation-0 base — the S15/S26 shape): folded base rows (which keep
-    * their original delta id as a `delta` column) plus live delta
+    * generation-0 base — the S15/S26/S33 shape): folded base rows (which
+    * keep their original delta id as a `delta` column) plus live delta
     * directories, both restricted to delta < `uptoExclusive` — the
     * replay-isolation contract S15 reads with (a replayed batch must see
     * exactly the store state it saw the first time, compacted or not).
-    * None when the store holds nothing below the bound. */
+    * None when the store holds nothing below the bound.
+    *
+    * Two reads whatever the number of live deltas: the folded base, and
+    * ONE scan over every live delta directory with `basePath` = `root`, so
+    * partition discovery supplies `delta` (cast to bigint, the type the
+    * folded base stores). A per-delta read would pay one schema-inference
+    * job per delta, making every probe's cost grow with the delta count. */
   def snapshotPureDelta(spark: SparkSession, root: String,
-      uptoExclusive: Long = Long.MaxValue): Option[DataFrame] = {
-    val snap = current(spark, root)
+      uptoExclusive: Long = Long.MaxValue): Option[DataFrame] =
+    readPureDelta(spark, root, current(spark, root), uptoExclusive)._2
+
+  /** The live delta ids of `snap` below `uptoExclusive`, and the rows of
+    * base + those deltas (see [[snapshotPureDelta]]). */
+  private def readPureDelta(spark: SparkSession, root: String,
+      snap: Snapshot, uptoExclusive: Long): (Seq[Long], Option[DataFrame]) = {
     val baseP = baseDir(s"$root/folded", snap)
     val base =
       if (snap.gen > 0L && fs(spark, root).exists(new Path(baseP)))
         Some(spark.read.parquet(baseP)
           .filter(col("delta") < lit(uptoExclusive)))
       else None
-    val deltas = committedDeltaIds(spark, root, snap.foldedBelow)
+    val ids = committedDeltaIds(spark, root, snap.foldedBelow)
       .filter(_ < uptoExclusive)
-      .map(i => spark.read.parquet(s"$root/delta=$i")
-        .withColumn("delta", lit(i)))
-    (base.toSeq ++ deltas)
-      .reduceOption(_.unionByName(_, allowMissingColumns = false))
+    val deltas =
+      if (ids.isEmpty) None
+      else Some(spark.read.option("basePath", root)
+        .parquet(ids.map(i => s"$root/delta=$i"): _*)
+        .withColumn("delta", col("delta").cast("bigint")))
+    (ids, (base.toSeq ++ deltas)
+      .reduceOption(_.unionByName(_, allowMissingColumns = false)))
   }
 
   /** Fold the committed deltas of a pure-delta store below `uptoExclusive`
@@ -209,7 +230,8 @@ object DeltaStore {
     * would let the replay see its own signatures (the caller owns that
     * watermark; pass e.g. the current batch id). `midCompactionHook` is a
     * test seam running after the fold write, before the manifest
-    * publish.
+    * publish. The fold reads through [[snapshotPureDelta]]'s own read, so
+    * what a compaction folds is by construction what a reader sees.
     *
     * `foldTransform` reshapes the folded rows before they land as the
     * new base — identity for stores whose rows are facts (signatures,
@@ -222,19 +244,12 @@ object DeltaStore {
       foldTransform: DataFrame => DataFrame = identity): Unit = {
     val snap0 = current(spark, root)
     gcSuperseded(spark, s"$root/folded", root, snap0)
-    val ids = committedDeltaIds(spark, root, snap0.foldedBelow)
-      .filter(_ < uptoExclusive)
+    // base rows all sit below snap0.foldedBelow <= ids.min < uptoExclusive,
+    // so the read's base filter keeps every one of them
+    val (ids, rows) = readPureDelta(spark, root, snap0, uptoExclusive)
     if (ids.isEmpty) return
     val next = Snapshot(snap0.gen + 1L, ids.max + 1L)
-    val baseP = baseDir(s"$root/folded", snap0)
-    val oldBase =
-      if (snap0.gen > 0L && fs(spark, root).exists(new Path(baseP)))
-        Seq(spark.read.parquet(baseP))
-      else Seq.empty
-    val folded = (oldBase ++ ids.map(i =>
-        spark.read.parquet(s"$root/delta=$i").withColumn("delta", lit(i))))
-      .reduce(_.unionByName(_, allowMissingColumns = false))
-    val reshaped = foldTransform(folded)
+    val reshaped = foldTransform(rows.get)
     require(reshaped.columns.contains("delta"),
       "foldTransform must preserve the delta column")
     reshaped.write.mode("overwrite")

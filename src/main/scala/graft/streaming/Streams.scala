@@ -986,22 +986,32 @@ object Streams {
     * verify — the same contract as the batch twin
     * `Dedup.incrementalNearAgainst`), then appends its OWN signatures as
     * a new store delta, so later batches see earlier ones. The index
-    * maintenance a production near-dedup ingest actually runs: tonight's
-    * batch is shingled once, the store contributes at-rest signatures.
+    * maintenance a production near-dedup ingest actually runs: the batch
+    * is signed (shingled and minhashed) once and materialised once — as
+    * its own store delta, written first — and the probe reads its batch
+    * side back from that delta; the store contributes its at-rest
+    * signatures in one scan that is never shuffled — the batch's band
+    * rows, which the trigger bounds, are the broadcast side of the band
+    * join.
     *
     * Exactly-once discipline (the `pollEnvelopeSinkBatch` pattern): both
     * the decision output and the store delta are KEYED BY BATCH ID and
     * written with overwrite, and the store read EXCLUDES deltas ≥ the
-    * current batch id — a replayed batch rewrites its own delta and
+    * current batch id — so writing the delta before the probe never lets
+    * a batch match itself, and a replayed batch rewrites its own delta and
     * re-reads exactly the store state it saw the first time, instead of
-    * matching against its own half-written signatures or duplicating
-    * them. State is at rest, not in the state store: restart needs no
+    * matching against its own signatures or duplicating them. State is
+    * at rest, not in the state store: restart needs no
     * changelog replay, and the store doubles as the batch pipeline's
     * signature store (one format, both twins). */
   def nearDedupSinkBatch(storeDir: String, outDir: String,
       maxDistance: Double)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val docs = batch.select(col("doc_id"), col("text"))
+    val delta = s"$storeDir/delta=$batchId"
+    val signed = Dedup.signatureStore(batch, "text", "doc_id")
+    signed.write.mode("overwrite").parquet(delta)
+    // the schema is known: reading the delta back needs no inference job
+    val own = spark.read.schema(signed.schema).parquet(delta)
     // committed-snapshot read through the manifest-aware store reader:
     // folded base + live deltas, both restricted to delta < batchId — a
     // replayed batch sees exactly the store state it saw the first time
@@ -1010,13 +1020,10 @@ object Streams {
     val existing = graft.operators.DeltaStore
       .snapshotPureDelta(spark, storeDir, uptoExclusive = batchId)
       .map(_.select("doc", "shingles", "bk"))
-      .getOrElse( // first delta: an empty store with the operator's own schema
-        Dedup.signatureStore(docs.limit(0), "text", "doc_id"))
-    Dedup.incrementalNearAgainst(docs, existing, "text", "doc_id",
-        maxDistance)
+      .getOrElse(own.limit(0)) // first delta: an empty store, same format
+    Dedup.nearProbe(batch.select("doc_id"), own, existing, maxDistance,
+        broadcastBatch = true)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    Dedup.signatureStore(docs, "text", "doc_id")
-      .write.mode("overwrite").parquet(s"$storeDir/delta=$batchId")
   }
 
   /** S22 — continuous ANN index maintenance: each micro-batch of new
